@@ -205,6 +205,21 @@ object BenchGate {
 }
 
 object Bench {
+  /** Elapsed seconds of `body` and the error it threw, if any: a
+    * throwing query keeps its time for the gate but is reported. */
+  def timed(body: => Unit): (Double, Option[String]) = {
+    val t0 = System.nanoTime()
+    val err =
+      try { body; None }
+      catch { case e: Throwable => Some(s"${e.getClass.getName}: ${e.getMessage}") }
+    ((System.nanoTime() - t0) / 1e9, err)
+  }
+
+  /** The capture's additive `"errors"` block: query name → message. */
+  def errorsJson(errors: Seq[(String, String)]): String =
+    org.json4s.jackson.JsonMethods.compact(
+      org.json4s.JObject(errors.map { case (n, m) => n -> org.json4s.JString(m) }.toList))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -223,11 +238,15 @@ object Bench {
     spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().collect()
 
+    // every query error, in run order; one stderr line each
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     def timeQuery(name: String): Double = {
-      val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).count() }
-      catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+      val (sec, err) = timed(SparkEntry.queries(name)(spark, sfDir).count())
+      err.foreach { e =>
+        System.err.println(s"[bench] $name failed: $e")
+        errors.getOrElseUpdate(name, e)
+      }
+      sec
     }
     def loadAvg(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
@@ -290,10 +309,8 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val names = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    val results = names.zipWithIndex.map { case ((name, fn), i) =>
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      val sec = (System.nanoTime() - t0) / 1e9
+    val results = names.zipWithIndex.map { case ((name, _), i) =>
+      val sec = timeQuery(name)
       loadMax = math.max(loadMax, loadAvg())
       if ((i + 1) % SentinelEvery == 0 && i + 1 < names.size) {
         midSentinels += ((i + 1, timeQuery("q1_agg"), loadAvg()))
@@ -402,7 +419,8 @@ object Bench {
       s""""cpu_steal_pct":$stealPct,"other_busy_pct":$otherBusyPct,""" +
       s""""valid":$isValid}"""
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",$gate,$sentinel}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir",$gate,$sentinel,""" +
+      s""""errors":${errorsJson(errors.toSeq)}}"""
     println(line)
     // also persist the full line: the driver captures stdout TAIL only,
     // which truncated 42 of 96 per-query timings in the round-5 capture.

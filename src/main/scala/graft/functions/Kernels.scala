@@ -215,6 +215,55 @@ object Kernels {
     acc
   }
 
+  // ------------------------------------------------- coarse quantizer
+
+  /** The `n` nearest centroids of `vec`, ordered (cosine desc, cid asc).
+    * Cosine is [[expressions.CosineSimilarity]]'s arithmetic exactly:
+    * elements widened to double, dot and both norms accumulated in
+    * index order over the common prefix, 0.0 when a norm is zero — so a
+    * null vector, like a zero one, gets the lowest cids. Cosines compare
+    * as Spark orders doubles (-0.0 == 0.0, NaN above every number).
+    * `typeCode` is the element type, as in [[hyperplaneBands]]. */
+  def nearestCentroids(vec: ArrayData, typeCode: Int, table: CentroidTable,
+                       n: Int): ArrayData = {
+    val v = if (vec == null) new Array[Double](0) else Array.tabulate(vec.numElements()) { i =>
+      typeCode match {
+        case 0 => vec.getDouble(i)
+        case 1 => vec.getFloat(i).toDouble
+        case 2 => vec.getLong(i).toDouble
+        case _ => vec.getInt(i).toDouble
+      }
+    }
+    val cos = table.vecs.map { c =>
+      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+      while (i < math.min(v.length, c.length)) {
+        dot += v(i) * c(i); na += v(i) * v(i); nb += c(i) * c(i); i += 1
+      }
+      if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+    val ids = table.ids
+    def before(a: Int, b: Int): Boolean = {
+      val cmp = if (cos(a) == cos(b)) 0 else java.lang.Double.compare(cos(a), cos(b))
+      cmp > 0 || (cmp == 0 && ids(a) < ids(b))
+    }
+    // insertion into a sorted top-m buffer: m is nprobe-sized, one pass
+    val best = new Array[Int](math.min(n, ids.length))
+    var filled = 0
+    for (c <- ids.indices if filled < best.length || before(c, best(filled - 1))) {
+      var p = math.min(filled, best.length - 1)
+      while (p > 0 && before(c, best(p - 1))) { best(p) = best(p - 1); p -= 1 }
+      best(p) = c
+      filled = math.min(filled + 1, best.length)
+    }
+    ArrayData.toArrayData(best.map(ids(_)))
+  }
+
+  /** The doubles of centroid `cid`; null when the table lacks it. */
+  def centroidVector(cid: Long, table: CentroidTable): ArrayData = {
+    val i = table.indexOf(cid)
+    if (i < 0) null else ArrayData.toArrayData(table.vecs(i))
+  }
+
   /** Morton/Z-order interleave: bit i of dimension j lands at position
     * i·d + j, so a sort by the result alternates locality across ALL
     * dimensions (the space-filling-curve layout multi-column row-group

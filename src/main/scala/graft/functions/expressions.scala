@@ -1,8 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.types._
@@ -22,8 +24,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * object static forwarders are Janino-visible), so the surrounding
   * stage stays in whole-stage codegen — no CodegenFallback row
   * materialization anywhere in the expression surface. Reference
-  * objects (stopword/marker sets) ship through the codegen references
-  * array, once per plan.
+  * objects (stopword/marker sets, centroid tables) ship through the
+  * codegen references array, once per plan.
   */
 object expressions {
 
@@ -34,6 +36,17 @@ object expressions {
     case IntegerType => arr.getInt(i).toDouble
     case other => throw new IllegalArgumentException(s"unsupported element type $other")
   }
+
+  /** A numeric array's element type as the static kernels' `typeCode`:
+    * 0=double, 1=float, 2=long, 3=int. */
+  private def elemTypeCode(e: Expression): Int =
+    e.dataType.asInstanceOf[ArrayType].elementType match {
+      case DoubleType  => 0
+      case FloatType   => 1
+      case LongType    => 2
+      case IntegerType => 3
+      case other => throw new IllegalArgumentException(s"unsupported element type $other")
+    }
 
   /** cos(a, b) in one fused loop; 0.0 for zero-norm inputs. */
   case class CosineSimilarity(left: Expression, right: Expression)
@@ -251,14 +264,7 @@ object expressions {
     // code; same static-call shape as the other five kernels (hashes
     // are unchanged: Kernels.hyperplaneBands is the former eval loop,
     // moved verbatim)
-    private def typeCode: Int =
-      child.dataType.asInstanceOf[ArrayType].elementType match {
-        case DoubleType  => 0
-        case FloatType   => 1
-        case LongType    => 2
-        case IntegerType => 3
-        case other => throw new IllegalArgumentException(s"unsupported element type $other")
-      }
+    private def typeCode: Int = elemTypeCode(child)
     override def nullSafeEval(v: Any): Any =
       Kernels.hyperplaneBands(v.asInstanceOf[ArrayData], typeCode, bits, bands, seed)
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -411,6 +417,48 @@ object expressions {
       copy(left = l, right = r)
   }
 
+  /** The `n` nearest centroids' cids, (cosine desc, cid asc) — the one
+    * assignment kernel of IVF, IVF-PQ and SemDeDup
+    * (Kernels.nearestCentroids). Never null: a null vector gets the
+    * lowest cids, an empty table an empty array. */
+  case class NearestCentroids(child: Expression, table: CentroidTable, n: Int)
+      extends UnaryExpression {
+    require(n > 0, "n must be positive")
+    override def dataType: DataType = ArrayType(LongType, containsNull = false)
+    override def nullable: Boolean = false
+    override def prettyName: String = "nearest_centroids"
+    private def typeCode: Int = elemTypeCode(child)
+    override def eval(input: InternalRow): Any =
+      Kernels.nearestCentroids(child.eval(input).asInstanceOf[ArrayData], typeCode, table, n)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("centroids", table, classOf[CentroidTable].getName)
+      val v = child.genCode(ctx)
+      ev.copy(code = code"""
+        ${v.code}
+        ${CodeGenerator.javaType(dataType)} ${ev.value} = graft.functions.Kernels.nearestCentroids(
+          ${v.isNull} ? null : ${v.value}, $typeCode, $ref, $n);""", isNull = FalseLiteral)
+    }
+    override protected def withNewChildInternal(c: Expression) = copy(child = c)
+  }
+
+  /** A centroid's doubles by cid (Kernels.centroidVector); null for a
+    * null or unknown cid. */
+  case class CentroidVector(child: Expression, table: CentroidTable)
+      extends UnaryExpression {
+    override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+    override def nullable: Boolean = true
+    override def prettyName: String = "centroid_vector"
+    override def nullSafeEval(cid: Any): Any =
+      Kernels.centroidVector(cid.asInstanceOf[Long], table)
+    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+      val ref = ctx.addReferenceObj("centroids", table, classOf[CentroidTable].getName)
+      nullSafeCodeGen(ctx, ev, c =>
+        s"""${ev.value} = graft.functions.Kernels.centroidVector($c, $ref);
+           |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+    }
+    override protected def withNewChildInternal(c: Expression) = copy(child = c)
+  }
+
   /** Morton/Z-order bit interleave of pre-scaled per-dimension ranks.
     * Static-call codegen (Kernels.interleaveBits) — runs per row inside
     * whole-stage codegen on the write path of a Z-clustered layout. */
@@ -452,4 +500,8 @@ object expressions {
     column(MarkerCounts(expression(tokens), profiles))
   def interleave_bits(ranks: Column, bits: Int): Column =
     column(InterleaveBits(expression(ranks), bits))
+  def nearest_centroids(vec: Column, table: CentroidTable, n: Int): Column =
+    column(NearestCentroids(expression(vec), table, n))
+  def centroid_vector(cid: Column, table: CentroidTable): Column =
+    column(CentroidVector(expression(cid.cast(LongType)), table))
 }

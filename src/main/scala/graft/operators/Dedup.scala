@@ -961,10 +961,10 @@ object Dedup {
     * trades candidate volume for recall. Verification is exact cosine
     * on candidates only.
     *
-    * Plan shape: centroids are driver-localized (broadcast-sized by
-    * definition) → per-point top-nassign via one max_by-style window on
-    * skinny (id, cid) rows → cid equi-join candidates (skinny, ids
-    * only) → vectors rejoin for the exact verify. */
+    * Plan shape: centroids are a driver-held table → per-point
+    * top-nassign cids from the `nearest_centroids` kernel (a narrow
+    * map) → cid equi-join candidates (skinny, ids only) → vectors
+    * rejoin for the exact verify. */
   def semanticDedupPairs(df: DataFrame,
                          threshold: Double,
                          nClusters: Int = 16,
@@ -986,20 +986,14 @@ object Dedup {
     val k =
       if (nClusters > 0) nClusters
       else math.max(16, math.ceil(df.count() / 256.0).toInt)
-    // the quantizer is driver-held (broadcast-sized by definition) so
-    // the per-point top-nassign is a per-row sort of the literal
-    // centroid scores — no ×k cross-join explosion and no window
-    // shuffle of (id, cid, ccos) rows (guide §2.4); the (−ccos, cid)
-    // struct sort key is the same comparator the old
-    // row_number(ccos desc, cid) window applied
+    // the quantizer is driver-held, so the per-point top-nassign is the
+    // per-row `nearest_centroids` kernel, ranked (ccos desc, cid asc) —
+    // no ×k cross-join explosion and no window shuffle (guide §2.4)
     val cents = Similarity.kmeansCentroidsLocal(df, k, kmeansIters, vecCol, idCol)
     val base = spread(df).select(col(idCol).as("id"), col(vecCol).as("v"))
-    val scored = transform(typedLit(cents), c => struct(
-      (-graft.functions.expressions.cosine_sim(col("v"), c.getField("_2"))).as("n"),
-      c.getField("_1").as("cid")))
     val assigned = base.select(col("id"),
-        explode(slice(array_sort(scored), 1, nassign)).as("p"))
-      .select(col("id"), col("p.cid").as("cid"))
+      explode(graft.functions.expressions.nearest_centroids(col("v"), cents, nassign))
+        .as("cid"))
     val candidates = assigned.as("a").join(assigned.as("b"),
         col("a.cid") === col("b.cid") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))

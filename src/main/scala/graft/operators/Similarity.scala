@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.functions.CentroidTable
+import graft.functions.expressions.{centroid_vector, nearest_centroids}
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (BASELINE.json north star).
   *
@@ -78,90 +81,38 @@ object Similarity {
       .select(col("query_id"), col("rank"), col("nbr_id"), col("cos"))
   }
 
-  /** Driver-local centroid table: (cid, centroid as exact doubles).
-    * Bounded by contract — a coarse quantizer is nlist rows, broadcast-
-    * sized by definition; holding it on the driver is the same memory
-    * class as the broadcast the old plan shipped every iteration. */
-  private[operators] type LocalCents = Seq[(Long, Seq[Double])]
-
   /** Exact double lift of a collected vector cell (float parquet
     * arrays round-trip exactly through (double) widening — the same
     * cast the cosine kernel's codegen applies per element). */
-  private[operators] def toDoubles(xs: Seq[Any]): Seq[Double] = xs.map {
-    case d: Double => d
-    case f: Float  => f.toDouble
-    case l: Long   => l.toDouble
-    case i: Int    => i.toDouble
-    case other => throw new IllegalArgumentException(s"not numeric: $other")
-  }
+  private[operators] def toDoubles(xs: Seq[Any]): Seq[Double] =
+    xs.map(_.asInstanceOf[Number].doubleValue)
 
-  private[operators] def collectCents(centroids: DataFrame): LocalCents =
-    centroids.select(col("cid").cast("long"), col("centroid")).collect().toSeq
-      .map(r => (r.getLong(0), toDoubles(r.getSeq[Any](1))))
+  /** Collect a centroid frame into a driver-held [[CentroidTable]]:
+    * ids cast to long, vectors as exact doubles. */
+  private[operators] def collectTable(df: DataFrame, idCol: String = "cid",
+                                      vecCol: String = "centroid"): CentroidTable =
+    CentroidTable(df.select(col(idCol).cast("long"), col(vecCol)).collect().toSeq
+      .map(r => (r.getLong(0), toDoubles(r.getSeq[Any](1)))))
 
-  /** Ceiling for embedding a quantizer as a plan LITERAL, in doubles
-    * held by the expression tree. A typedLit ships inside EVERY
-    * serialized task binary and plan, and very large literals defeat
-    * codegen — where a broadcast ships once per executor. Contract-
-    * sized quantizers (nlist ≲ thousands) sit far below the default
-    * 1M doubles (~8 MB of plan payload, e.g. nlist 8192 × dim 128);
-    * above it every literal-quantizer path falls back to its
-    * broadcast-join twin. Test seam:
-    * -Dgraft.similarity.maxLitDoubles=N (ScaleForcedSpec forces 1). */
-  private[operators] def maxLitDoubles: Long =
-    sys.props.get("graft.similarity.maxLitDoubles").flatMap(_.toLongOption)
-      .getOrElse(1L << 20)
-
-  private[operators] def litBytesCeiling: Long = maxLitDoubles * 8
-
-  private[operators] def litFits(cents: LocalCents): Boolean =
-    cents.iterator.map(_._2.size.toLong).sum <= maxLitDoubles
-
-  private def centsDF(cents: LocalCents,
-                      spark: org.apache.spark.sql.SparkSession): DataFrame = {
-    import spark.implicits._
-    cents.toDF("cid", "centroid")
-  }
-
-  /** Per-row nearest-centroid struct (ccos, -cid, cid) against a
-    * LITERAL centroid array — ONE codegen loop over nlist centroids,
-    * no cross join, no shuffle (guide §2.4: the assignment decision
-    * needs no data movement at all when the quantizer is driver-held).
-    * array_max's struct ordering = (highest cosine, then lowest cid),
-    * the exact tie-break the old max_by(struct(ccos, -cid)) applied. */
-  private[operators] def nearestCentroidStruct(v: Column,
-                                               cents: LocalCents): Column = {
-    import graft.functions.expressions.cosine_sim
-    array_max(transform(typedLit(cents), c => struct(
-      cosine_sim(v, c.getField("_2")).as("c"),
-      (-c.getField("_1")).as("n"),
-      c.getField("_1").as("cid"))))
-  }
-
-  /** Spherical k-means, LOCAL form: the fitted (cid, centroid) rows on
-    * the driver (they are localized per iteration anyway — broadcast-
-    * sized by definition). Assignment is a per-row argmax expression
-    * against the literal centroid table (no cross-join explosion, no
-    * per-iteration shuffle of the points — guide §2.4); the only
-    * shuffle per Lloyd iteration is the map-side-combined
-    * (cid, pos) mean aggregation. */
+  /** Spherical k-means, LOCAL form: the fitted centroids as a
+    * driver-held [[CentroidTable]] (they are localized per iteration
+    * anyway). Assignment is the per-row `nearest_centroids` kernel (no
+    * cross-join explosion, no per-iteration shuffle of the points —
+    * guide §2.4); the only shuffle per Lloyd iteration is the
+    * map-side-combined (cid, pos) mean aggregation. */
   private[operators] def kmeansCentroidsLocal(corpus: DataFrame,
                                               nlist: Int,
                                               iters: Int,
                                               vecCol: String = "embedding",
                                               idCol: String = "vec_id",
-                                              sampleFraction: Double = 1.0): LocalCents = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
+                                              sampleFraction: Double = 1.0): CentroidTable = {
     val all = corpus.select(col(idCol).as("pid"), col(vecCol).as("pv"))
     val pts = (if (sampleFraction < 1.0) all.sample(sampleFraction, 42) else all).cache()
     // deterministic init: first nlist by id (exact doubles of the raw
     // vectors — (double) widening is what the cosine kernel applies)
-    var cents: LocalCents = corpus.orderBy(col(idCol)).limit(nlist)
-      .select(col(idCol).cast("long"), col(vecCol)).collect().toSeq
-      .map(r => (r.getLong(0), toDoubles(r.getSeq[Any](1))))
-    val dim = cents.headOption.map(_._2.length).getOrElse(0)
-    for (_ <- 0 until iters if cents.nonEmpty) {
+    var cents = collectTable(corpus.orderBy(col(idCol)).limit(nlist), idCol, vecCol)
+    val dim = cents.dim
+    for (_ <- 0 until iters if !cents.isEmpty) {
       // per-row nearest cid (no shuffle), then ONE aggregation with a
       // per-position avg column (no posexplode row blow-up, ONE
       // exchange instead of the old two-level (cid,pos)→(cid) pair);
@@ -170,29 +121,13 @@ object Similarity {
       // clusters simply produce no row — exactly like the old groupBy.
       val means = (0 until dim).map(i =>
         round(avg(element_at(col("pv"), i + 1)), 6).as(s"m$i"))
-      // size-guarded assignment: literal argmax below the ceiling, the
-      // broadcast-join max_by twin (identical (ccos, -cid) comparator
-      // over the same collected doubles) above it
-      val assigned =
-        if (litFits(cents))
-          pts.select(
-            nearestCentroidStruct(col("pv"), cents).getField("cid").as("cid"),
-            col("pv"))
-        else {
-          import graft.functions.expressions.cosine_sim
-          pts.crossJoin(broadcast(centsDF(cents, spark)))
-            .withColumn("ccos", cosine_sim(col("pv"), col("centroid")))
-            .groupBy(col("pid"))
-            .agg(max_by(struct(col("cid"), col("pv")),
-              struct(col("ccos"), -col("cid"))).as("best"))
-            .select(col("best.cid").as("cid"), col("best.pv").as("pv"))
-        }
-      val rows = assigned
+      val rows = pts
+        .select(nearest_centroids(col("pv"), cents, 1).getItem(0).as("cid"), col("pv"))
         .groupBy(col("cid"))
         .agg(means.head, means.tail: _*)
         .collect().toSeq
         .map(r => (r.getLong(0), (0 until dim).map(i => r.getDouble(i + 1)): Seq[Double]))
-      cents = rows.sortBy(_._1)
+      cents = CentroidTable(rows.sortBy(_._1))
     }
     if (iters > 0) pts.unpersist(blocking = false)
     cents
@@ -200,10 +135,10 @@ object Similarity {
 
   /** Spherical k-means coarse quantizer (Lloyd's iterations). Init is
     * deterministic (first nlist by id); each iteration assigns points
-    * to their max-cosine centroid via a per-row argmax against the
-    * driver-held centroid literal (no cross join, no assignment
-    * shuffle) and recomputes centroids as the element-wise mean of
-    * their members — one map-side-combined aggregation per iteration.
+    * to their max-cosine centroid with the `nearest_centroids` kernel
+    * over the driver-held table (no cross join, no assignment shuffle)
+    * and recomputes centroids as the element-wise mean of their
+    * members — one map-side-combined aggregation per iteration.
     * Means are rounded to 6 decimals so aggregation-order float jitter
     * can't flip downstream assignment ranks between runs.
     *
@@ -224,7 +159,7 @@ object Similarity {
         .select(col(idCol).cast("long").as("cid"), col(vecCol).as("centroid"))
     else
       kmeansCentroidsLocal(corpus, nlist, iters, vecCol, idCol, sampleFraction)
-        .toDF("cid", "centroid")
+        .rows.toDF("cid", "centroid")
   }
 
   /** IVF (inverted-file) ANN: a coarse quantizer of `nlist` centroids
@@ -248,14 +183,20 @@ object Similarity {
     ivfSearch(buildIvfIndex(corpus, nlist, kmeansIters, kmeansSample, vecCol, idCol),
       queries, k, nprobe, vecCol, idCol)
 
-  /** A prebuilt IVF index: the broadcast-sized centroid table plus the
-    * corpus assignment (one row per vector: vector, id, list id).
-    * Build ONCE per corpus, search many query batches — the 100 TB
-    * usage pattern. `save` persists both frames through the store
-    * layer with `cid` as the index, so the assignment lands
-    * range-partitioned and sorted BY LIST: a later search's probe-list
-    * filter prunes parquet row groups to the nprobe lists it needs. */
+  /** A prebuilt IVF index: the centroid frame plus the corpus
+    * assignment (one row per vector: vector, id, list id). Build ONCE
+    * per corpus, search many query batches — the 100 TB usage pattern.
+    * `save` persists both frames through the store layer with `cid` as
+    * the index, so the assignment lands range-partitioned and sorted BY
+    * LIST: a later search's probe-list filter prunes parquet row groups
+    * to the nprobe lists it needs. */
   final case class IvfIndex(centroids: DataFrame, assigned: DataFrame) {
+    /** The quantizer, collected once per index value and reused by
+      * every search and append through it. Safe because the quantizer
+      * is frozen by contract, and a loaded item's frame pins its file
+      * list at load time. */
+    lazy val table: CentroidTable = collectTable(centroids)
+
     def save(c: graft.store.Collection, name: String,
              overwrite: Boolean = true): Unit = parallelWrites(Seq(
       () => c.write(s"${name}__centroids", centroids, indexCols = Seq("cid"),
@@ -271,7 +212,7 @@ object Similarity {
   }
 
   /** Fit the quantizer and assign every corpus vector to its nearest
-    * centroid (rank-1 over a broadcast cross join). */
+    * centroid. */
   def buildIvfIndex(corpus: DataFrame,
                     nlist: Int = 16,
                     kmeansIters: Int = 0,
@@ -284,11 +225,10 @@ object Similarity {
       // fit locally, assign with the same local table — no re-collect
       val local = kmeansCentroidsLocal(corpus, nlist, kmeansIters, vecCol, idCol,
         kmeansSample)
-      IvfIndex(local.toDF("cid", "centroid"),
+      IvfIndex(local.rows.toDF("cid", "centroid"),
         assignToCentroidsLocal(corpus, local, vecCol, idCol))
     } else {
-      val cents = corpus.orderBy(col(idCol)).limit(nlist)
-        .select(col(idCol).cast("long").as("cid"), col(vecCol).as("centroid"))
+      val cents = kmeansCentroids(corpus, nlist, 0, vecCol, idCol)
       IvfIndex(cents, assignToCentroids(corpus, cents, vecCol, idCol))
     }
   }
@@ -296,49 +236,24 @@ object Similarity {
   /** Assign every vector to its nearest centroid under a FROZEN
     * quantizer — the step shared by the index build, and by
     * incremental appends ([[appendToIvfIndex]]/[[appendToIvfPqIndex]]).
-    * The quantizer is broadcast-sized by contract, so it is collected
-    * once and the assignment becomes a per-row argmax expression — a
-    * NARROW map: no cross-join explosion and no shuffle at any corpus
-    * size (the old max_by plan shuffled every (id, vector) row). */
+    * The quantizer is collected once into a [[CentroidTable]] and the
+    * assignment is the per-row `nearest_centroids` kernel — a NARROW
+    * map: no cross-join explosion and no shuffle at any corpus size.
+    * One output row per input row (duplicate ids keep their own rows);
+    * `cid` is always a long. */
   def assignToCentroids(df: DataFrame, centroids: DataFrame,
                         vecCol: String = "embedding",
                         idCol: String = "vec_id"): DataFrame =
-    if (graft.store.Partitioner.estimatedBytes(centroids) > litBytesCeiling) {
-      // quantizer too large to even collect: broadcast-join twin on the
-      // centroid FRAME (the kernels' per-element (double) casts make
-      // the arithmetic identical to the collected-doubles path)
-      import graft.functions.expressions.cosine_sim
-      df.select(col(idCol).as("nbr_id"), col(vecCol).as("cv"))
-        .crossJoin(broadcast(centroids))
-        .withColumn("ccos", cosine_sim(col("cv"), col("centroid")))
-        .groupBy(col("nbr_id"))
-        .agg(max_by(struct(col("cid"), col("cv")),
-          struct(col("ccos"), -col("cid"))).as("best"))
-        .select(col("nbr_id"), col("best.cv").as("cv"), col("best.cid").as("cid"))
-    } else assignToCentroidsLocal(df, collectCents(centroids), vecCol, idCol)
+    assignToCentroidsLocal(df, collectTable(centroids), vecCol, idCol)
 
-  private[operators] def assignToCentroidsLocal(df: DataFrame, cents: LocalCents,
+  private[operators] def assignToCentroidsLocal(df: DataFrame, cents: CentroidTable,
                                                 vecCol: String,
                                                 idCol: String): DataFrame = {
     val base = df.select(col(idCol).as("nbr_id"), col(vecCol).as("cv"))
-    // empty quantizer: the old cross join produced zero rows
+    // empty quantizer: no list to assign to, so no rows
     if (cents.isEmpty) base.withColumn("cid", lit(null).cast("long")).limit(0)
-    else if (litFits(cents))
-      base.select(col("nbr_id"), col("cv"),
-        nearestCentroidStruct(col("cv"), cents).getField("cid").as("cid"))
-    else {
-      // size-guarded fallback: the broadcast-join max_by twin — one
-      // copy of the quantizer per executor instead of one per task
-      // binary; identical (ccos, -cid) comparator over the same
-      // collected doubles
-      import graft.functions.expressions.cosine_sim
-      base.crossJoin(broadcast(centsDF(cents, df.sparkSession)))
-        .withColumn("ccos", cosine_sim(col("cv"), col("centroid")))
-        .groupBy(col("nbr_id"))
-        .agg(max_by(struct(col("cid"), col("cv")),
-          struct(col("ccos"), -col("cid"))).as("best"))
-        .select(col("nbr_id"), col("best.cv").as("cv"), col("best.cid").as("cid"))
-    }
+    else base.select(col("nbr_id"), col("cv"),
+      nearest_centroids(col("cv"), cents, 1).getItem(0).as("cid"))
   }
 
   /** Incrementally add vectors to a PERSISTED IVF index — the FAISS
@@ -356,7 +271,7 @@ object Similarity {
                        idCol: String = "vec_id"): IvfIndex = {
     val idx = IvfIndex.load(c, name)
     c.append(s"${name}__assigned",
-      assignToCentroids(newVectors, idx.centroids, vecCol, idCol),
+      assignToCentroidsLocal(newVectors, idx.table, vecCol, idCol),
       graft.store.DuplicateHandling.KeepAll)
     IvfIndex.load(c, name)
   }
@@ -378,35 +293,12 @@ object Similarity {
     // The probe table is BOUNDED (|queries| × nprobe rows of (id, vec,
     // cid)) — localize it once instead of re-executing the centroid-
     // ranking subplan for both the cid collect and the broadcast join.
-    // The quantizer is broadcast-sized by contract, so the per-query
-    // top-nprobe is a per-row sort of the literal centroid scores —
-    // no cross join, no window shuffle; ordering (ccos desc, cid asc)
-    // via the (−ccos, cid) struct sort key, the same comparator the
-    // old row_number window applied. One job here, then the search
-    // itself is a single pass over the pruned assignment scan.
-    val localOpt =
-      if (graft.store.Partitioner.estimatedBytes(index.centroids) > litBytesCeiling) None
-      else Some(collectCents(index.centroids)).filter(litFits)
-    val probeRows = (localOpt match {
-      case Some(local) =>
-        val scored = transform(typedLit(local), c => struct(
-          (-cosine_sim(col("qv"), c.getField("_2"))).as("n"),
-          c.getField("_1").as("cid")))
-        q.select(col("query_id"), col("qv"),
-            explode(slice(array_sort(scored), 1, nprobe)).as("p"))
-          .select(col("query_id"), col("qv"), col("p.cid").as("cid"))
-      case None =>
-        // size-guarded fallback: broadcast-join + row_number window —
-        // the (ccos desc, cid asc) ranking the (−ccos, cid) struct
-        // sort replicates
-        val wProbe = Window.partitionBy(col("query_id"))
-          .orderBy(col("ccos").desc, col("cid"))
-        q.crossJoin(broadcast(index.centroids))
-          .withColumn("ccos", cosine_sim(col("qv"), col("centroid")))
-          .withColumn("crank", row_number().over(wProbe))
-          .filter(col("crank") <= nprobe)
-          .select(col("query_id"), col("qv"), col("cid"))
-    }).collect()
+    // The per-query top-nprobe is the `nearest_centroids` kernel over
+    // the index's table, ranked (ccos desc, cid asc): no cross join, no
+    // window shuffle. One job here, then the search itself is a single
+    // pass over the pruned assignment scan.
+    val probeRows = q.select(col("query_id"), col("qv"),
+      explode(nearest_centroids(col("qv"), index.table, nprobe)).as("cid")).collect()
     val probedCids = probeRows.map(_.getLong(2)).distinct.toSeq
     import spark.implicits._
     val probes = probeRows.map(r =>
@@ -426,7 +318,7 @@ object Similarity {
   // ---------------------------------------- product quantization (PQ)
 
   /** A product-quantization index over L2-normalized vectors (cosine ≡
-    * dot after normalization): `codebooks` is the broadcast-sized table
+    * dot after normalization): `codebooks` is the small table
     * of per-subspace k-means centroids ((sub, code, cv) — m·ksub rows),
     * `codes` holds one row per corpus vector: its id, its m one-byte-ish
     * codes, and the normalized vector (read ONLY by the exact re-rank
@@ -450,22 +342,32 @@ object Similarity {
 
   object PqIndex {
     def load(c: graft.store.Collection, name: String): PqIndex = {
-      val cb = c.item(s"${name}__codebooks").data
-      // shape params from sidecar metadata (zero Spark jobs on the hot
-      // search path); codebook-scan agg only as legacy fallback
-      val meta = c.metadata(s"${name}__codebooks")
-      def intOf(key: String): Option[Int] = meta.get(key) match {
-        case Some(org.json4s.JInt(i)) if i > 0 => Some(i.toInt)
-        case _ => None
-      }
-      val (m, ksub) = (intOf("pq_m"), intOf("pq_ksub")) match {
-        case (Some(a), Some(b)) => (a, b)
-        case _ =>
-          val r = cb.agg(max(col("sub")), max(col("code"))).head()
-          (r.getInt(0) + 1, r.getInt(1) + 1)
-      }
+      val (cb, _, m, ksub) = loadCodebooks(c, name)
       PqIndex(cb, c.item(s"${name}__codes").data, m, ksub)
     }
+  }
+
+  private def metaInt(meta: Map[String, org.json4s.JValue], key: String): Option[Int] =
+    meta.get(key) match {
+      case Some(org.json4s.JInt(i)) if i > 0 => Some(i.toInt)
+      case _ => None
+    }
+
+  /** A persisted codebook item, its sidecar metadata, and the PQ shape
+    * (m, ksub). The shape comes from the metadata (zero Spark jobs on
+    * the hot search path); the codebook-scan agg is only a fallback for
+    * indexes persisted before the metadata carried it. */
+  private def loadCodebooks(c: graft.store.Collection, name: String)
+      : (DataFrame, Map[String, org.json4s.JValue], Int, Int) = {
+    val cb = c.item(s"${name}__codebooks").data
+    val meta = c.metadata(s"${name}__codebooks")
+    val (m, ksub) = (metaInt(meta, "pq_m"), metaInt(meta, "pq_ksub")) match {
+      case (Some(a), Some(b)) => (a, b)
+      case _ =>
+        val r = cb.agg(max(col("sub")), max(col("code"))).head()
+        (r.getInt(0) + 1, r.getInt(1) + 1)
+    }
+    (cb, meta, m, ksub)
   }
 
   /** L2-normalize an array column (zero vectors stay zero). */
@@ -491,9 +393,9 @@ object Similarity {
   }
 
   /** Driver-local PQ codebook state: rows (sub, code, centroid) plus
-    * the effective code count — m·ksub rows of dsub doubles, broadcast-
-    * sized by definition (the old plan broadcast-joined exactly this
-    * table every iteration). */
+    * the effective code count — m·ksub rows of dsub doubles, small by
+    * definition (the old plan broadcast-joined exactly this table every
+    * iteration). */
   private[operators] final case class PqFit(cb: Seq[(Int, Int, Seq[Double])],
                                             m: Int, kEff: Int, dsub: Int) {
     /** cb grouped per sub (ordered 0..m−1), each entry carrying its
@@ -558,9 +460,7 @@ object Similarity {
     // one bounded collect serves dim + seed ids + seed codebooks (the
     // old path paid a dim head(), a seed-id collect AND a full
     // sub-point scan filtered to the seeds)
-    val seedRows = corpus.orderBy(col(idCol))
-      .select(col(idCol).cast("long"), col(vecCol)).limit(ksub).collect().toSeq
-      .map(r => (r.getLong(0), toDoubles(r.getSeq[Any](1))))
+    val seedRows = collectTable(corpus.orderBy(col(idCol)).limit(ksub), idCol, vecCol).rows
     val dim = seedRows.headOption.map(_._2.length)
       .getOrElse(throw new NoSuchElementException(
         "buildPqIndex: empty corpus — nothing to fit"))
@@ -617,7 +517,7 @@ object Similarity {
   /** Fit per-subspace k-means codebooks and PQ-encode the corpus. The
     * fit's per-iteration assignment and the final corpus encode are
     * per-row argmax expressions against the driver-held codebooks
-    * (broadcast-sized by definition): the encode is a single NARROW
+    * (m·ksub entries, small by definition): the encode is a single NARROW
     * map over the corpus — zero joins, zero shuffles, at any corpus
     * size. The RAW vector rides along for exact re-rank (raw, not
     * normalized: cosine on the original values keeps the re-rank
@@ -647,8 +547,8 @@ object Similarity {
 
   /** Per-query flattened ADC lookup table: lut[sub·ksub + code] =
     * dot(query subvector, codebook centroid). |queries| rows of m·ksub
-    * doubles — broadcast-sized. The codebooks are broadcast-sized by
-    * contract, so the table is ONE narrow map over the queries (per-sub
+    * doubles per query. The codebooks are small by contract (m·ksub
+    * entries), so the table is ONE narrow map over the queries (per-sub
     * slice + per-code dot against the codebook literal, flattened in
     * (sub, code) order — the exact layout the old sorted collect_list
     * produced) with the RAW query vector riding along for the exact
@@ -745,6 +645,9 @@ object Similarity {
                               codes: DataFrame, m: Int, ksub: Int,
                               residual: Boolean = false,
                               nlist: Int = 0) {
+    /** The coarse quantizer, collected once (see [[IvfIndex.table]]). */
+    lazy val table: CentroidTable = collectTable(centroids)
+
     def save(c: graft.store.Collection, name: String,
              overwrite: Boolean = true): Unit = parallelWrites(Seq(
       () => c.write(s"${name}__centroids", centroids, indexCols = Seq("cid"),
@@ -759,26 +662,12 @@ object Similarity {
 
   object IvfPqIndex {
     def load(c: graft.store.Collection, name: String): IvfPqIndex = {
-      val cb = c.item(s"${name}__codebooks").data
-      val meta = c.metadata(s"${name}__codebooks")
-      def intOf(key: String): Option[Int] = meta.get(key) match {
-        case Some(org.json4s.JInt(i)) if i > 0 => Some(i.toInt)
-        case _ => None
-      }
-      // shape params come from the sidecar metadata (zero Spark jobs on
-      // the hot search path); the codebook-scan agg is only a fallback
-      // for indexes persisted before the metadata carried them
-      val (m, ksub) = (intOf("pq_m"), intOf("pq_ksub")) match {
-        case (Some(a), Some(b)) => (a, b)
-        case _ =>
-          val r = cb.agg(max(col("sub")), max(col("code"))).head()
-          (r.getInt(0) + 1, r.getInt(1) + 1)
-      }
+      val (cb, meta, m, ksub) = loadCodebooks(c, name)
       val residual = meta.get("pq_residual")
         .exists { case org.json4s.JBool(b) => b; case _ => false }
       IvfPqIndex(c.item(s"${name}__centroids").data, cb,
         c.item(s"${name}__codes").data, m, ksub, residual,
-        intOf("ivf_nlist").getOrElse(0))
+        metaInt(meta, "ivf_nlist").getOrElse(0))
     }
   }
 
@@ -814,47 +703,38 @@ object Similarity {
     import spark.implicits._
     val ivf = coarse.getOrElse(
       buildIvfIndex(corpus, nlist, kmeansIters, sampleFraction, vecCol, idCol))
-    // the quantizer is broadcast-sized by contract: hold it locally so
-    // the per-row list assignment (and the residual subtraction) are
+    // the quantizer is driver-held (the coarse index's table), so the
+    // per-row list assignment and the residual subtraction are
     // expressions — the codes table is ONE narrow map over the corpus,
     // with zero joins and zero shuffles (the old plan joined the PQ
     // encode back to the assignment — a full-corpus exchange pair)
-    val local = collectCents(ivf.centroids)
-    val assigned = assignToCentroidsLocal(corpus, local, vecCol, idCol)
-    if (!residual) {
-      val fit = fitPq(corpus, m, ksub, pqIters, vecCol, idCol, sampleFraction,
-        normalizeInput = true)
-      val codes = assigned.filter(col("cv").isNotNull)
-        .select(col("cid"), col("nbr_id"),
-          pqCodesExpr(normalized(col("cv")), fit).as("codes"),
-          col("cv").cast("array<double>").as("cv"))
-      IvfPqIndex(ivf.centroids, fit.cb.toDF("sub", "code", "cv"), codes,
-        fit.m, fit.kEff, nlist = nlist)
-    } else {
-      // residual table: one row per vector, rv = normalized(cv) − centroid
-      // (centroid looked up per row from the literal quantizer map;
-      // size-guarded: an oversized quantizer joins instead)
-      val withCent =
-        if (litFits(local))
-          assigned.withColumn("__cent",
-            element_at(typedLit(local.toMap), col("cid")))
-        else assigned.join(broadcast(centsDF(local, spark)), Seq("cid"))
-          .withColumnRenamed("centroid", "__cent")
-      val residuals = withCent
-        .select(col("nbr_id"), col("cid"), col("cv"),
-          zip_with(normalized(col("cv")), col("__cent"),
-            (a, b) => a - b).as("rv"))
-      val fit = fitPq(residuals, m, ksub, pqIters,
+    val assigned = assignToCentroidsLocal(corpus, ivf.table, vecCol, idCol)
+    val fit =
+      if (!residual)
+        fitPq(corpus, m, ksub, pqIters, vecCol, idCol, sampleFraction, normalizeInput = true)
+      else fitPq(assigned.select(col("nbr_id"), col("cid"), col("cv"),
+          pqInput(ivf.table, residual).as("rv")), m, ksub, pqIters,
         vecCol = "rv", idCol = "nbr_id", sampleFraction = sampleFraction,
         normalizeInput = false)
-      // re-rank needs the ORIGINAL vector, not the residual
-      val codes = residuals.filter(col("rv").isNotNull)
-        .select(col("cid"), col("nbr_id"),
-          pqCodesExpr(col("rv"), fit).as("codes"), col("cv"))
-      IvfPqIndex(ivf.centroids, fit.cb.toDF("sub", "code", "cv"), codes,
-        fit.m, fit.kEff, residual = true, nlist = nlist)
-    }
+    IvfPqIndex(ivf.centroids, fit.cb.toDF("sub", "code", "cv"),
+      ivfPqCodes(assigned, ivf.table, fit, residual), fit.m, fit.kEff, residual, nlist)
   }
+
+  /** The vector PQ encodes: x̂, or for a residual index x̂ − c with the
+    * centroid looked up per row from the quantizer table (residuals are
+    * never renormalized). */
+  private def pqInput(table: CentroidTable, residual: Boolean): Column =
+    if (!residual) normalized(col("cv"))
+    else zip_with(normalized(col("cv")), centroid_vector(col("cid"), table), (a, b) => a - b)
+
+  /** Codes rows of an IVF-PQ index from an assignment (nbr_id, cv,
+    * cid): list id, PQ codes, and the ORIGINAL vector for the exact
+    * re-rank. One narrow map — no joins, no shuffles. */
+  private def ivfPqCodes(assigned: DataFrame, table: CentroidTable, fit: PqFit,
+                         residual: Boolean): DataFrame =
+    assigned.filter(col("cv").isNotNull).select(col("cid"), col("nbr_id"),
+      pqCodesExpr(pqInput(table, residual), fit).as("codes"),
+      (if (residual) col("cv") else col("cv").cast("array<double>")).as("cv"))
 
   /** Incrementally add vectors to a PERSISTED IVF-PQ index — the FAISS
     * `add()` contract for the composed index: coarse quantizer AND PQ
@@ -869,35 +749,17 @@ object Similarity {
                          vecCol: String = "embedding",
                          idCol: String = "vec_id"): IvfPqIndex = {
     val idx = IvfPqIndex.load(c, name)
-    // both frozen quantizers are broadcast-sized by contract: collect
-    // once, encode the batch as ONE narrow map (list id + residual +
-    // PQ codes per row) — no joins, no shuffles, O(new vectors)
-    val local = collectCents(idx.centroids)
+    // both frozen quantizers are driver-held: encode the batch as ONE
+    // narrow map (list id + residual + PQ codes per row) — no joins, no
+    // shuffles, O(new vectors)
     val cbRows = idx.codebooks.select(col("sub"), col("code"), col("cv"))
       .collect().toSeq
       .map(r => (r.getInt(0), r.getInt(1), toDoubles(r.getSeq[Any](2))))
     val dsub = cbRows.headOption.map(_._3.length).getOrElse(0)
     val fit = PqFit(cbRows, idx.m, idx.ksub, dsub)
-    val assigned = assignToCentroidsLocal(newVectors, local, vecCol, idCol)
-    val codes =
-      if (idx.residual) {
-        // size-guarded centroid lookup, same as buildIvfPqIndex
-        val withCent =
-          if (litFits(local))
-            assigned.withColumn("__cent",
-              element_at(typedLit(local.toMap), col("cid")))
-          else assigned.join(broadcast(centsDF(local, newVectors.sparkSession)),
-            Seq("cid")).withColumnRenamed("centroid", "__cent")
-        withCent.filter(col("cv").isNotNull)
-          .select(col("cid"), col("nbr_id"),
-            pqCodesExpr(zip_with(normalized(col("cv")),
-              col("__cent"), (a, b) => a - b), fit).as("codes"),
-            col("cv"))
-      } else assigned.filter(col("cv").isNotNull)
-        .select(col("cid"), col("nbr_id"),
-          pqCodesExpr(normalized(col("cv")), fit).as("codes"),
-          col("cv").cast("array<double>").as("cv"))
-    c.append(s"${name}__codes", codes, graft.store.DuplicateHandling.KeepAll)
+    c.append(s"${name}__codes", ivfPqCodes(
+      assignToCentroidsLocal(newVectors, idx.table, vecCol, idCol), idx.table, fit, idx.residual),
+      graft.store.DuplicateHandling.KeepAll)
     IvfPqIndex.load(c, name)
   }
 
@@ -918,33 +780,14 @@ object Similarity {
     import spark.implicits._
     val q = queries.select(col(idCol).cast("long").as("query_id"),
       col(vecCol).cast("array<double>").as("qv"))
-    // qc = q̂·c rides along for the residual decomposition (ignored by
-    // the raw-code variant). Same literal-quantizer per-row top-nprobe
-    // as ivfSearch — no cross join, no window shuffle; (−ccos, cid)
-    // struct sort = the old (ccos desc, cid asc) ranking.
-    val localOpt =
-      if (graft.store.Partitioner.estimatedBytes(index.centroids) > litBytesCeiling) None
-      else Some(collectCents(index.centroids)).filter(litFits)
-    val probeRows = (localOpt match {
-      case Some(local) =>
-        val scored = transform(typedLit(local), c => struct(
-          (-cosine_sim(col("qv"), c.getField("_2"))).as("n"),
-          c.getField("_1").as("cid"),
-          dot_product(normalized(col("qv")), c.getField("_2")).as("qc")))
-        q.select(col("query_id"),
-            explode(slice(array_sort(scored), 1, nprobe)).as("p"))
-          .select(col("query_id"), col("p.cid").as("cid"), col("p.qc").as("qc"))
-      case None =>
-        // size-guarded fallback: broadcast-join + window (same ranking)
-        val wProbe = Window.partitionBy(col("query_id"))
-          .orderBy(col("ccos").desc, col("cid"))
-        q.crossJoin(broadcast(index.centroids))
-          .withColumn("ccos", cosine_sim(col("qv"), col("centroid")))
-          .withColumn("qc", dot_product(normalized(col("qv")), col("centroid")))
-          .withColumn("crank", row_number().over(wProbe))
-          .filter(col("crank") <= nprobe)
-          .select(col("query_id"), col("cid"), col("qc"))
-    }).collect()
+    // Same per-query top-nprobe as ivfSearch; qc = q̂·c rides along for
+    // the residual decomposition (ignored by the raw-code variant).
+    val probeRows = q
+      .select(col("query_id"), col("qv"),
+        explode(nearest_centroids(col("qv"), index.table, nprobe)).as("cid"))
+      .select(col("query_id"), col("cid"),
+        dot_product(normalized(col("qv")), centroid_vector(col("cid"), index.table)).as("qc"))
+      .collect()
     val probedCids = probeRows.map(_.getLong(1)).distinct.toSeq
     val probePairs = probeRows.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .toSeq.toDF("query_id", "cid", "qc")
@@ -955,10 +798,9 @@ object Similarity {
     val depth = if (rerank > 0) rerank
       else {
         // sizing only runs on the auto path — an explicit rerank skips
-        // it; nlist comes from index metadata when available (zero
-        // jobs), falling back to a centroid count for legacy indexes
-        val nlist = if (index.nlist > 0) index.nlist
-                    else index.centroids.count().toInt
+        // it; nlist comes from index metadata when available, falling
+        // back to the table's size for legacy indexes
+        val nlist = if (index.nlist > 0) index.nlist else index.table.size
         math.max(128, sizedRerank(index.codes) * math.min(nprobe, nlist) / math.max(nlist, 1))
       }
     val rawAdc = column(graft.functions.expressions.PqAdc(

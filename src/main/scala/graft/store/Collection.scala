@@ -1251,6 +1251,10 @@ final class Collection private[store] (val spark: SparkSession, val path: SPath)
     Partitioner.layout(df, idx, n, cuts)
   }
 
+  /** Sidecar form of the index stats. When a planning scan produced
+    * them (`Partitioner.planFlat`/`planAppend`/`computeStats`), they
+    * are exact only for a deterministic input plan — see planFlat's
+    * scaladoc for where the write path guarantees that. */
   private def statsMeta(s: Partitioner.IndexStats): Map[String, JValue] =
     Meta.obj("_rows" -> s.rows) ++
       s.minMs.map(v => Meta.obj("_index_min_ms" -> v)).getOrElse(Map.empty) ++

@@ -182,7 +182,16 @@ object Partitioner {
   /** ONE narrow aggregation job (guide §1.4) carrying BOTH the layout
     * stats (count, plus index min/max when temporal — value-identical
     * to [[computeStats]]) and the fine-grained quantile cuts of the
-    * sort key. The scan reads only the index column. */
+    * sort key. The scan reads only the index column.
+    *
+    * Determinism assumption: this is a SEPARATE execution of `df`, so
+    * the stats it puts in the sidecar (`_rows`, index min/max) match
+    * the written rows only for a deterministic `df`. The write path
+    * guarantees that for what it adds itself — `Collection.ensureIndex`
+    * persists a synthesized index before any scan, `appendStream`
+    * persists each chunk, an append's item side reads pinned files —
+    * but a caller frame with non-deterministic expressions (rand, an
+    * unseeded sample) must be persisted by the caller first. */
   def planFlat(df: DataFrame, indexCol: String,
                key: Option[org.apache.spark.sql.Column]): FlatPlan = key match {
     case None => FlatPlan(computeStats(df, indexCol), None)

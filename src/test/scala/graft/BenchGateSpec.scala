@@ -291,4 +291,15 @@ class BenchGateSpec extends AnyFunSuite {
     val inRun = Map("store_delete_where" -> 9.0, "other" -> 9.0)
     assert(BenchGate.soloCandidates(inRun, refs) == Seq("other"))
   }
+
+  test("a throwing query is timed AND reported as an error; a passing one is not") {
+    val (okSec, okErr) = Bench.timed(Thread.sleep(20))
+    assert(okErr.isEmpty && okSec >= 0.02)
+    val (badSec, badErr) = Bench.timed(throw new IllegalStateException("boom \"q\""))
+    assert(badSec >= 0.0)
+    assert(badErr.contains("java.lang.IllegalStateException: boom \"q\""))
+    val json = Bench.errorsJson(Seq("q_bad" -> badErr.get, "q_nl" -> "a\nb"))
+    assert(json == """{"q_bad":"java.lang.IllegalStateException: boom \"q\"","q_nl":"a\nb"}""")
+    assert(Bench.errorsJson(Nil) == "{}")
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, DedupIndex}
@@ -21,6 +21,11 @@ import graft.operators.{Dedup, DedupIndex}
   *    one hot month spread across salt files, appends preserved.
   *  - distributed connected components at REAL diameter (chain graphs,
   *    label must propagate hop by hop), not just small cycles.
+  *  - the nearest-centroid kernel over a centroid table larger than the
+  *    retired plan-literal ceiling (1M doubles): every assignment
+  *    checked against a plain-Scala argmax. A companion arm pins the
+  *    kernel bit-equal to the literal-array reference expressions
+  *    (ties, zero/null vectors, empty table, float/double elements).
   */
 class ScaleForcedSpec extends SparkSpec {
   import spark.implicits._
@@ -252,7 +257,7 @@ class ScaleForcedSpec extends SparkSpec {
   test("bounds-path flat layout: collision-free carriers, disjoint sorted files, twin-equal content") {
     import graft.store.Partitioner
     // carrierValues must be a bucket→partition bijection at every size
-    for (b <- 2 to 64) {
+    for (b <- 2 to Partitioner.MaxBoundsPartitions) {
       val cs = Partitioner.carrierValues(b)
       val parts = cs.map(v => java.lang.Math.floorMod(
         org.apache.spark.unsafe.hash.Murmur3_x86_32.hashInt(v, 42), b))
@@ -297,43 +302,124 @@ class ScaleForcedSpec extends SparkSpec {
       s"bounds must balance: ${counts.toSeq}")
   }
 
-  test("oversized quantizer literals fall back to broadcast-join twins with identical results") {
+  /** The literal-array centroid ranking the nearest-centroid kernel
+    * replaced, kept as its reference: cosine against a typedLit table,
+    * best by array_max of (cos, -cid, cid) for one centroid, by
+    * array_sort of (-cos, cid) for the top n. */
+  private def refNearest(v: Column, cents: Seq[(Long, Seq[Double])]): Column =
+    array_max(transform(typedLit(cents), c => struct(
+      graft.functions.expressions.cosine_sim(v, c.getField("_2")).as("c"),
+      (-c.getField("_1")).as("n"), c.getField("_1").as("cid")))).getField("cid")
+
+  private def refTopN(v: Column, cents: Seq[(Long, Seq[Double])], n: Int): Column =
+    transform(slice(array_sort(transform(typedLit(cents), c => struct(
+      (-graft.functions.expressions.cosine_sim(v, c.getField("_2"))).as("n"),
+      c.getField("_1").as("cid")))), 1, n), p => p.getField("cid"))
+
+  test("nearest_centroids and centroid_vector equal the literal-array reference expressions") {
+    import graft.functions.CentroidTable
+    import graft.functions.expressions.{centroid_vector, nearest_centroids}
+    import org.apache.spark.sql.types._
+    val rng = new scala.util.Random(7)
+    val dim = 6
+    def rnd(): Seq[Double] = Seq.fill(dim)(math.round(rng.nextGaussian() * 4) / 4.0)
+    val base = Seq.fill(9)(rnd())
+    // ties: cids 4 and 11 share a vector, cid 20 is a zero centroid,
+    // cid 7 scales cid 3's vector (cosines equal up to rounding)
+    val cents: Seq[(Long, Seq[Double])] =
+      Seq(3L, 9L, 1L, 15L, 8L, 2L, 13L, 5L, 17L).zip(base) ++ Seq(
+        (11L, base(4)), (4L, base(4)), (20L, Seq.fill(dim)(0.0)),
+        (7L, base(0).map(_ * 2.0)))
+    val vecs: Seq[Seq[Double]] = Seq.fill(40)(rnd()) ++ base ++ Seq(
+      Seq.fill(dim)(0.0), Seq(1.0, 0.0), Seq.empty[Double], base(4).map(_ * 0.5))
+    val rows = vecs.zipWithIndex.map { case (v, i) => Row(i.toLong, v) } :+ Row(999L, null)
+    def frame(et: DataType) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 3),
+      StructType(Seq(StructField("id", LongType), StructField("v", ArrayType(DoubleType)))))
+      .select(col("id"), col("v").cast(ArrayType(et)).as("v"))
+    val nlist = cents.size
+    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN"); et <- Seq(DoubleType, FloatType);
+         table <- Seq(cents, Seq.empty[(Long, Seq[Double])])) {
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", mode == "CODEGEN_ONLY")
+      try {
+        val t = CentroidTable(table)
+        val df = frame(et)
+        val got = df.select(col("id"),
+          nearest_centroids(col("v"), t, 1).as("one"), refNearest(col("v"), table).as("r1"),
+          nearest_centroids(col("v"), t, 3).as("three"), refTopN(col("v"), table, 3).as("r3"),
+          nearest_centroids(col("v"), t, nlist + 2).as("all"), refTopN(col("v"), table, nlist + 2).as("rall"))
+          .collect()
+        assert(got.length == rows.length)
+        got.foreach { r =>
+          val ctx = s"mode=$mode et=$et table=${table.size} id=${r.getLong(0)}"
+          assert(r.getSeq[Long](1).headOption == Option(r.get(2)), s"n=1 diverged: $ctx")
+          assert(r.getSeq[Long](3) == r.getSeq[Long](4), s"n=3 diverged: $ctx")
+          assert(r.getSeq[Long](5) == r.getSeq[Long](6), s"n>nlist diverged: $ctx")
+          assert(r.getSeq[Long](5).size == table.size)
+        }
+        if (table.nonEmpty) {
+          // the null vector ranks by cid alone; the zero vector too
+          val byId = got.map(r => r.getLong(0) -> r.getSeq[Long](5)).toMap
+          assert(byId(999L) == table.map(_._1).sorted)
+          assert(byId(40L + base.size) == table.map(_._1).sorted)
+          val cv = table.map(_._1).toDF("cid").select(col("cid"),
+            centroid_vector(col("cid"), t).as("got"),
+            element_at(typedLit(table.toMap), col("cid")).as("ref")).collect()
+          cv.foreach(r => assert(r.getSeq[Double](1) == r.getSeq[Double](2), s"cid ${r.getLong(0)}"))
+          assert(spark.range(1).select(centroid_vector(lit(12345L), t)).head().isNullAt(0))
+        }
+      } finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
+  }
+
+  test("a centroid table above the retired literal ceiling assigns every row to its plain-Scala argmax") {
     import graft.operators.Similarity
-    val corpus = spark.range(1500).select(col("id").as("vec_id"),
-      transform(sequence(lit(0), lit(7)),
-        i => sin(col("id") * (i + lit(1))).cast("double")).as("embedding"))
-      .localCheckpoint(true)
-    val queries = corpus.filter($"vec_id" % 300 === 0)
-    def ivf() = Similarity.ivfTopK(corpus, queries, k = 5, nlist = 8,
-        nprobe = 3, kmeansIters = 2)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
-    def ivfpq() = {
-      val idx = Similarity.buildIvfPqIndex(corpus, nlist = 8, kmeansIters = 1,
-        m = 4, ksub = 8, pqIters = 1, residual = true)
-      Similarity.ivfPqSearch(idx, queries, k = 5, nprobe = 3, rerank = 64)
-        .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3))).toSet
+    // 8192 x 130 doubles: above the 1M-double ceiling that used to force
+    // the broadcast-join twins; the kernel has no ceiling at all
+    val nlist = 8192; val dim = 130
+    val rng = new scala.util.Random(11)
+    val cents = (0 until nlist).map(c => (c.toLong * 3 + 1, Array.fill(dim)(rng.nextGaussian())))
+    val vecs = (0 until 400).map(_ => Array.fill(dim)(rng.nextGaussian()))
+    def cos(a: Array[Double], b: Array[Double]): Double = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+      if (na == 0.0 || nb == 0.0) 0.0 else dot / (math.sqrt(na) * math.sqrt(nb))
     }
-    // assignment plan shape under each regime
-    def assignPlan() = {
-      val cents = corpus.orderBy($"vec_id").limit(8)
-        .select($"vec_id".cast("long").as("cid"), $"embedding".as("centroid"))
-        .localCheckpoint(true)
-      Similarity.assignToCentroids(corpus, cents)
-        .queryExecution.executedPlan.toString
-    }
-    val litIvf = ivf(); val litPq = ivfpq()
-    val litPlan = assignPlan()
-    assert(!litPlan.contains("BroadcastExchange"),
-      s"literal path must not broadcast:\n$litPlan")
-    sys.props("graft.similarity.maxLitDoubles") = "1"
-    try {
-      val forcedPlan = assignPlan()
-      assert(forcedPlan.contains("BroadcastExchange"),
-        s"guarded path must broadcast the quantizer:\n$forcedPlan")
-      assert(ivf() == litIvf, "IVF results diverged under the size guard")
-      assert(ivfpq() == litPq, "IVF-PQ results diverged under the size guard")
-    } finally sys.props.remove("graft.similarity.maxLitDoubles")
-    assert(litIvf.nonEmpty && litPq.nonEmpty)
+    val expected = vecs.zipWithIndex.map { case (v, i) =>
+      i.toLong -> cents.map { case (cid, c) => (cos(v, c), -cid) }.max._2 * -1
+    }.toMap
+    val centFrame = cents.map { case (cid, c) => (cid, c.toSeq) }.toDF("cid", "centroid")
+    val corpus = spark.createDataFrame(vecs.zipWithIndex.map { case (v, i) => (i.toLong, v.toSeq) })
+      .toDF("vec_id", "embedding").repartition(4)
+    assert(nlist.toLong * dim > (1L << 20))
+    val assigned = Similarity.assignToCentroids(corpus, centFrame)
+    val plan = assigned.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastExchange") && plan.contains("CentroidTable(8192x130)"),
+      s"expected one narrow map over the table:\n${plan.take(2000)}")
+    assert(plan.length < 20000, s"the plan must not print the table (${plan.length} chars)")
+    val got = assigned.select($"nbr_id", $"cid").as[(Long, Long)].collect().toMap
+    assert(got == expected)
+  }
+
+  test("assignToCentroids returns a long cid for an int-cid quantizer and keeps duplicate ids") {
+    import graft.operators.Similarity
+    val cents = Seq((2, Seq(1.0, 0.0)), (1, Seq(0.0, 1.0))).toDF("cid", "centroid")
+    assert(cents.schema("cid").dataType == org.apache.spark.sql.types.IntegerType)
+    // vec_id 5 appears three times with different vectors: each row
+    // keeps its own assignment (a per-id aggregation would merge them)
+    val corpus = Seq((5L, Seq(0.9, 0.1)), (5L, Seq(0.1, 0.9)), (5L, Seq(1.0, 1.0)),
+      (6L, Seq(0.2, 0.8))).toDF("vec_id", "embedding")
+    val out = Similarity.assignToCentroids(corpus, cents)
+    assert(out.schema("cid").dataType == org.apache.spark.sql.types.LongType)
+    val rows = out.select($"nbr_id", $"cv", $"cid").collect()
+      .map(r => (r.getLong(0), r.getSeq[Double](1), r.getLong(2))).toSet
+    // (1, 1) ties: equal cosine, the lower cid wins
+    assert(rows == Set((5L, Seq(0.9, 0.1), 2L), (5L, Seq(0.1, 0.9), 1L),
+      (5L, Seq(1.0, 1.0), 1L), (6L, Seq(0.2, 0.8), 1L)))
   }
 
   test("distributed connected components converge at real chain diameter") {

@@ -18,7 +18,7 @@
 # Usage:
 #   tools/bench_capture.sh <sf_dir> <out_json>
 # Environment (all optional, passed through to graft.Bench):
-#   SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_ANCHORS,
+#   SPARK_GRAFT_CPUS (default: the CPU count, nproc), SPARK_GRAFT_ANCHORS,
 #   SPARK_GRAFT_Q1_BAND, SPARK_GRAFT_BENCH_ONLY
 # Tuning:
 #   MAX_TRIES (default 4), QUIET_WINDOWS (default 3 x WINDOW_SEC),
@@ -68,7 +68,7 @@ for try in $(seq 1 "$MAX_TRIES"); do
   echo "=== attempt $try/$MAX_TRIES: waiting for a quiet host"
   wait_quiet
   echo "=== launching graft.Bench over $SF_DIR"
-  SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+  SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
     sbt -batch "runMain graft.Bench" 2>/dev/null | grep -F '"metric"' || true
   if python3 -c "import json,sys; d=json.load(open('$CAPTURE')); \
       sys.exit(0 if d.get('sentinel',{}).get('valid') else 1)"; then
